@@ -36,6 +36,7 @@ from momyre_spark.sinks.jdbc_upsert import (
     ConnFactory,
     delete_dataframe,
     upsert_dataframe,
+    write_dataframe,
 )
 from momyre_spark.spec import Spec, enforce_schema
 
@@ -213,29 +214,15 @@ class ReplicationEngine:
 
         At 100 TB this is the difference between re-shipping the table and
         shipping one new column."""
-        from pyspark.sql import functions as F
-
-        from momyre_spark.streaming.pipeline import patch_partition
-
         tspec = self.spec.tables[table]
-        df = enforce_schema(self.source(table), tspec).select("_id", *columns)
-        fields = list(columns)
-        present = F.array(*[F.lit(c) for c in columns])
-        patched = df.withColumn("__present", present)
-        if self.sink_partitions:
-            patched = patched.coalesce(self.sink_partitions)
-        # close over plain locals — a lambda capturing `self` would drag the
-        # SparkSession into the task closure (unpicklable)
-        cf, dn = self.connection_factory, self.dialect_name
-        patched.foreachPartition(
-            lambda rows: patch_partition(
-                rows,
-                connection_factory=cf,
-                dialect_name=dn,
-                table=table,
-                fields=fields,
-                key="_id",
-            )
+        df = enforce_schema(self.source(table), tspec).select(*columns, "_id")
+        sql = self.dialect.update_sql(table, columns, "_id")
+        write_dataframe(
+            df,
+            lambda row: (sql, tuple(row)),
+            connection_factory=self.connection_factory,
+            dialect_name=self.dialect_name,
+            num_partitions=self.sink_partitions,
         )
 
     # -- full run (reference §3.1/§3.3 planner) ------------------------

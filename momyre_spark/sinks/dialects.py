@@ -12,6 +12,7 @@ injection the engine does not reproduce (SURVEY.md §7 non-goals).
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_$]*$")
@@ -72,8 +73,8 @@ class Dialect:
         maintained aggregate table with one statement per row — the
         sink-side half of operators/incremental.py. NOT idempotent ('sum'
         double-applies on replay) — callers must pair it with the in-txn
-        batch progress marker, which is exactly what merge_upsert_partition
-        does."""
+        batch progress marker, which is exactly what merge_upsert_dataframe's
+        staged protocol does."""
         t, e = self.q(table), "excluded"
 
         def combine(c: str) -> str:
@@ -100,6 +101,20 @@ class Dialect:
 
     def delete_sql(self, table: str, key: str) -> str:
         return f"DELETE FROM {self.q(table)} WHERE {self.q(key)} = ?"
+
+    def update_sql(
+        self, table: str, columns: Sequence[str], key: str, ts_col: str | None = None
+    ) -> str:
+        """Partial update of ``columns`` by key (reference K4,
+        mysql.go:449-505). With ``ts_col`` it also advances the row's
+        sequence column, and only if the incoming one is >= the stored one;
+        params are then ``(*values, ts, key, ts)``, else ``(*values, key)``."""
+        sets = ", ".join(f"{self.q(c)} = {self.ph}" for c in columns)
+        where = f"{self.q(key)} = {self.ph}"
+        if ts_col is not None:
+            sets += f", {self.q(ts_col)} = {self.ph}"
+            where += f" AND {self.q(ts_col)} <= {self.ph}"
+        return f"UPDATE {self.q(table)} SET {sets} WHERE {where}"
 
     def insert_sql(self, table: str, columns: list[str]) -> str:
         cols = ", ".join(self.q(c) for c in columns)

@@ -5,16 +5,24 @@ Re-expression of the reference's write path (``/root/reference/app/mysql.go``):
 - K2/K3 upsert        : ``upsertRow``/``appendRow`` (mysql.go:357-431) — one
                         row, one statement, one txn there; batched
                         set-based upserts per partition here.
+- K4 partial update   : mysql.go:449-505 — rows grouped by the set of
+                        fields they change, one prepared statement per
+                        group.
 - K5 delete           : ``deleteRow`` (mysql.go:507-534).
 - K1/K6 exactly-once  : the reference bumps its ``momyre(name,value)``
                         checkpoint row INSIDE the data transaction
                         (``updateTimestampInTx``, mysql.go:563-588). The
                         engine keeps that exact trick, generalized to
                         microbatches: each partition's transaction also
-                        upserts ``(table, batch_id)`` into the progress
+                        upserts ``(label, batch_id)`` into the progress
                         table; a replayed batch is detected and skipped —
                         idempotent under Structured Streaming's
                         at-least-once ``foreachBatch`` re-delivery.
+
+Every write goes through one executor-side body, :func:`write_partition`:
+one connection and one transaction per partition, whatever mix of
+statements the partition's rows need. A CDC batch's upserts, patches and
+deletes for a table therefore commit together, under one replay marker.
 
 Connections are made by a picklable ``connection_factory`` (a zero-arg
 callable returning a DBAPI connection), so executors — not the driver — own
@@ -34,8 +42,11 @@ from pyspark.sql import DataFrame
 from momyre_spark.sinks.dialects import DIALECTS, Dialect, check_ident
 
 PROGRESS_TABLE = "momyre_progress"  # analog of the `momyre` table (mysql.go:128-144)
+BATCH_ROWS = 1000  # rows per executemany call
 
 ConnFactory = Callable[[], Any]
+# maps a row to the (sql, params) it writes, or None to skip the row
+Statement = Callable[[Any], "tuple[str, tuple] | None"]
 
 
 def ensure_progress_table(cur: Any, dialect: Dialect) -> None:
@@ -48,7 +59,7 @@ def ensure_progress_table(cur: Any, dialect: Dialect) -> None:
 
 
 def _progress_key(
-    table: str, part: int | None = None, layout: int | None = None
+    label: str, part: int | None = None, layout: int | None = None
 ) -> str:
     # per-PARTITION progress: partitions of one batch commit independently,
     # so each needs its own replay marker. The total partition count is part
@@ -57,17 +68,15 @@ def _progress_key(
     # not match the old markers — skipping rows never applied loses writes,
     # while reapplying is safe (upserts/patches/deletes are idempotent).
     if part is None:
-        return f"batch:{table}"
-    if layout is None:
-        return f"batch:{table}:p{part}"
-    return f"batch:{table}:p{part}of{layout}"
+        return f"batch:{label}"
+    return f"batch:{label}:p{part}of{layout}"
 
 
-def read_progress(cur: Any, dialect: Dialect, name: str, ph: str = "?") -> int | None:
+def read_progress(cur: Any, dialect: Dialect, name: str) -> int | None:
     """S4: read a resume point (mysql.go:108-123). None = from scratch."""
     q = dialect.q
     cur.execute(
-        f"SELECT {q('value')} FROM {q(PROGRESS_TABLE)} WHERE {q('name')} = {ph}",
+        f"SELECT {q('value')} FROM {q(PROGRESS_TABLE)} WHERE {q('name')} = {dialect.ph}",
         (name,),
     )
     row = cur.fetchone()
@@ -80,61 +89,60 @@ def _write_progress_in_tx(cur: Any, dialect: Dialect, name: str, batch_id: int) 
     cur.execute(sql, (name, str(batch_id)))
 
 
-def upsert_partition(
+def write_partition(
     rows: Iterable,
+    statement: Statement,
     *,
     connection_factory: ConnFactory,
     dialect_name: str,
-    table: str,
-    columns: list[str],
-    key: str,
+    layout: int,
     batch_id: int | None = None,
-    batch_size: int = 1000,
-    ts_guard_col: str | None = None,
-    layout: int | None = None,
-    progress_label: str | None = None,
+    label: str | None = None,
 ) -> None:
-    """Executor-side body: batched upsert of one partition in one txn.
+    """Executor-side body of every sink write: one partition, one txn.
+
+    Each row goes through ``statement``; rows are grouped by the SQL they
+    need and each group runs as ``executemany`` in chunks of BATCH_ROWS.
+    Rows of different groups must touch different keys (one action per key),
+    since groups do not keep their relative order.
 
     With ``batch_id`` set, the transaction also records
-    ``(batch:{table}, batch_id)``; if the stored id already >= batch_id the
-    partition was applied by a previous attempt and is skipped (exactly-once
-    per batch against at-least-once delivery). ``layout`` is the batch's
-    total partition count — part of the marker key, so replays under a
-    different partition layout reapply instead of silently skipping."""
+    ``(batch:{label}:p{part}of{layout}, batch_id)``; if the stored id is
+    already >= batch_id the partition was applied by a previous attempt and
+    is skipped (exactly-once per batch against at-least-once delivery).
+    ``layout`` is the batch's total partition count — part of the marker
+    key, so replays under a different partition layout reapply instead of
+    silently skipping."""
     dialect = DIALECTS[dialect_name]
-    check_ident(table)
-    ph = dialect.ph
-    try:
+    marker = None
+    if batch_id is not None:
         from pyspark import TaskContext
 
         tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else None
-    except Exception:
-        part = None
-    pkey = _progress_key(progress_label or table, part, layout)
+        marker = _progress_key(label, tc.partitionId() if tc else None, layout)
     conn = connection_factory()
     try:
         cur = conn.cursor()
-        ensure_progress_table(cur, dialect)
-        if batch_id is not None:
-            seen = read_progress(cur, dialect, pkey, ph)
+        if marker is not None:
+            ensure_progress_table(cur, dialect)
+            seen = read_progress(cur, dialect, marker)
             if seen is not None and seen >= batch_id:
                 return  # replayed batch/partition — already applied
-        if ts_guard_col is not None:
-            sql = dialect.guarded_upsert_sql(table, columns, key, ts_guard_col)
-        else:
-            sql = dialect.upsert_sql(table, columns, key)
-        buf: list[tuple] = []
+        groups: dict[str, list[tuple]] = {}
         for row in rows:
-            buf.append(tuple(row[c] for c in columns))
-            if len(buf) >= batch_size:
-                cur.executemany(sql, buf)
+            stmt = statement(row)
+            if stmt is None:
+                continue
+            buf = groups.setdefault(stmt[0], [])
+            buf.append(stmt[1])
+            if len(buf) >= BATCH_ROWS:
+                cur.executemany(stmt[0], buf)
                 buf.clear()
-        if buf:
-            cur.executemany(sql, buf)
-        if batch_id is not None:
-            _write_progress_in_tx(cur, dialect, pkey, batch_id)
+        for sql, buf in groups.items():
+            if buf:
+                cur.executemany(sql, buf)
+        if marker is not None:
+            _write_progress_in_tx(cur, dialect, marker, batch_id)
         conn.commit()
     except Exception:
         conn.rollback()  # mysql.go:301-306 rollback-on-error
@@ -143,36 +151,37 @@ def upsert_partition(
         conn.close()
 
 
-def delete_partition(
-    rows: Iterable,
+def write_dataframe(
+    df: DataFrame,
+    statement: Statement,
     *,
     connection_factory: ConnFactory,
     dialect_name: str,
-    table: str,
-    key: str,
-    batch_size: int = 1000,
-    ts_guard_col: str | None = None,
+    batch_id: int | None = None,
+    label: str | None = None,
+    num_partitions: int | None = None,
 ) -> None:
-    """Executor-side body: batched delete of one partition's keys in one txn."""
-    dialect = DIALECTS[dialect_name]
-    check_ident(table)
-    conn = connection_factory()
-    try:
-        cur = conn.cursor()
-        if ts_guard_col is not None:
-            sql = dialect.guarded_delete_sql(table, key, ts_guard_col)
-            buf = [(row[key], row["__ts"]) for row in rows]
-        else:
-            sql = dialect.delete_sql(table, key)
-            buf = [(row[key],) for row in rows]
-        for i in range(0, len(buf), batch_size):
-            cur.executemany(sql, buf[i : i + batch_size])
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
+    """Run :func:`write_partition` over every partition of ``df``.
+
+    At scale, ``num_partitions`` caps sink concurrency (a thousand executors
+    hammering one MySQL is the actual bottleneck — the reference never had
+    the problem because it was single-threaded). ``batch_id`` and
+    ``label`` name the replay marker, see write_partition."""
+    if num_partitions:
+        df = df.coalesce(num_partitions)
+    rdd = df.rdd
+    layout = rdd.getNumPartitions()
+    rdd.foreachPartition(
+        lambda rows: write_partition(
+            rows,
+            statement,
+            connection_factory=connection_factory,
+            dialect_name=dialect_name,
+            layout=layout,
+            batch_id=batch_id,
+            label=label,
+        )
+    )
 
 
 def upsert_dataframe(
@@ -185,127 +194,26 @@ def upsert_dataframe(
     batch_id: int | None = None,
     num_partitions: int | None = None,
     ts_guard_col: str | None = None,
-    progress_label: str | None = None,
 ) -> None:
-    """Distributed upsert: every partition opens its own connection/txn.
-
-    At scale, ``num_partitions`` caps sink concurrency (a thousand executors
-    hammering one MySQL is the actual bottleneck — the reference never had
-    the problem because it was single-threaded)."""
+    """Distributed upsert: every partition opens its own connection/txn,
+    replay-guarded by the ``{table}`` marker when ``batch_id`` is set."""
     columns = df.columns
     if key not in columns:
         raise ValueError(f"key column {key!r} not in DataFrame ({columns})")
-    if num_partitions:
-        df = df.coalesce(num_partitions)
-    rdd = df.rdd
-    layout = rdd.getNumPartitions()
-    rdd.foreachPartition(
-        lambda rows: upsert_partition(
-            rows,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table,
-            columns=columns,
-            key=key,
-            batch_id=batch_id,
-            ts_guard_col=ts_guard_col,
-            layout=layout,
-            progress_label=progress_label,
-        )
+    dialect = DIALECTS[dialect_name]
+    if ts_guard_col is not None:
+        sql = dialect.guarded_upsert_sql(table, columns, key, ts_guard_col)
+    else:
+        sql = dialect.upsert_sql(table, columns, key)
+    write_dataframe(
+        df,
+        lambda row: (sql, tuple(row)),
+        connection_factory=connection_factory,
+        dialect_name=dialect_name,
+        batch_id=batch_id,
+        label=table,
+        num_partitions=num_partitions,
     )
-
-
-def merge_upsert_partition(
-    rows: Iterable,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    table: str,
-    columns: list[str],
-    key: str,
-    merge: dict[str, str],
-    batch_id: int | None = None,
-    batch_size: int = 1000,
-    layout: int | None = None,
-    progress_label: str | None = None,
-) -> None:
-    """Executor-side body: COMBINING upsert of one partition in one txn.
-
-    Same transaction/progress discipline as upsert_partition, but conflicts
-    merge with the stored row (sum/min/max per ``merge``) instead of
-    replacing it. The batch progress marker is what makes this exactly-once:
-    additive merges double-apply on replay, so the replay-skip is
-    correctness here, not just an optimization."""
-    dialect = DIALECTS[dialect_name]
-    check_ident(table)
-    ph = dialect.ph
-    try:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else None
-    except Exception:
-        part = None
-    pkey = _progress_key(progress_label or table, part, layout)
-    conn = connection_factory()
-    try:
-        cur = conn.cursor()
-        ensure_progress_table(cur, dialect)
-        if batch_id is not None:
-            seen = read_progress(cur, dialect, pkey, ph)
-            if seen is not None and seen >= batch_id:
-                return  # replayed batch/partition — already merged
-        sql = dialect.merge_upsert_sql(table, columns, key, merge)
-        buf: list[tuple] = []
-        for row in rows:
-            buf.append(tuple(row[c] for c in columns))
-            if len(buf) >= batch_size:
-                cur.executemany(sql, buf)
-                buf.clear()
-        if buf:
-            cur.executemany(sql, buf)
-        if batch_id is not None:
-            _write_progress_in_tx(cur, dialect, pkey, batch_id)
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
-
-
-def _stage_partition(
-    rows: Iterable,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    stage: str,
-    columns: list[str],
-    keys: list[str],
-    batch_size: int = 1000,
-) -> None:
-    """Executor-side body of the staging phase: REPLACE-upsert into the
-    staging table keyed (batch_id, key). Idempotent under any replay or
-    partition layout — re-staging a row overwrites the identical row."""
-    dialect = DIALECTS[dialect_name]
-    sql = dialect.upsert_sql_multi(stage, columns, keys)
-    conn = connection_factory()
-    try:
-        cur = conn.cursor()
-        buf: list[tuple] = []
-        for row in rows:
-            buf.append(tuple(row[c] for c in columns))
-            if len(buf) >= batch_size:
-                cur.executemany(sql, buf)
-                buf.clear()
-        if buf:
-            cur.executemany(sql, buf)
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
 
 
 def merge_upsert_dataframe(
@@ -345,28 +253,22 @@ def merge_upsert_dataframe(
     unknown = set(merge) - set(columns)
     if unknown:
         raise ValueError(f"merge columns not in DataFrame: {sorted(unknown)}")
-    if num_partitions:
-        df = df.coalesce(num_partitions)
+    dialect = DIALECTS[dialect_name]
 
     if batch_id is None:
-        df.rdd.foreachPartition(
-            lambda rows: merge_upsert_partition(
-                rows,
-                connection_factory=connection_factory,
-                dialect_name=dialect_name,
-                table=table,
-                columns=columns,
-                key=key,
-                merge=merge,
-            )
+        sql = dialect.merge_upsert_sql(table, columns, key, merge)
+        write_dataframe(
+            df,
+            lambda row: (sql, tuple(row)),
+            connection_factory=connection_factory,
+            dialect_name=dialect_name,
+            num_partitions=num_partitions,
         )
         return
 
     from pyspark.sql import functions as F
 
-    dialect = DIALECTS[dialect_name]
     check_ident(table)
-    ph = dialect.ph
     # The staging table is scoped to the WRITER (progress_label), not just
     # the target table: two streams merging into one table would otherwise
     # share a stage, replace-upsert over each other's (batch_id, key) rows,
@@ -428,17 +330,13 @@ def merge_upsert_dataframe(
         ).select(*columns)
     else:
         df = df.groupBy(key).agg(*aggs).select(*columns)
-    if num_partitions:
-        # the fold reshuffled to spark.sql.shuffle.partitions; re-apply the
-        # caller's sink-connection cap before executors open connections
-        df = df.coalesce(num_partitions)
 
     # phase 0 (driver): skip an already-applied batch; bootstrap staging DDL
     conn = connection_factory()
     try:
         cur = conn.cursor()
         ensure_progress_table(cur, dialect)
-        seen = read_progress(cur, dialect, bkey, ph)
+        seen = read_progress(cur, dialect, bkey)
         if seen is not None and seen >= batch_id:
             conn.commit()
             return  # replayed batch — already merged
@@ -453,25 +351,24 @@ def merge_upsert_dataframe(
     finally:
         conn.close()
 
-    # phase 1 (executors): idempotent staging writes
-    staged = df.withColumn("__batch_id", F.lit(batch_id).cast("bigint"))
+    # phase 1 (executors): idempotent staging writes. The fold reshuffled to
+    # spark.sql.shuffle.partitions; write_dataframe re-applies the caller's
+    # sink-connection cap before executors open connections.
     all_cols = ["__batch_id", *columns]
-    staged.select(*all_cols).foreachPartition(
-        lambda rows: _stage_partition(
-            rows,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            stage=stage,
-            columns=all_cols,
-            keys=["__batch_id", key],
-        )
+    stage_sql = dialect.upsert_sql_multi(stage, all_cols, ["__batch_id", key])
+    write_dataframe(
+        df.select(F.lit(batch_id).cast("bigint").alias("__batch_id"), *columns),
+        lambda row: (stage_sql, tuple(row)),
+        connection_factory=connection_factory,
+        dialect_name=dialect_name,
+        num_partitions=num_partitions,
     )
 
     # phase 2 (driver, one txn): marker-gated set-based apply + purge
     conn = connection_factory()
     try:
         cur = conn.cursor()
-        seen = read_progress(cur, dialect, bkey, ph)
+        seen = read_progress(cur, dialect, bkey)
         if seen is None or seen < batch_id:
             cur.execute(
                 dialect.merge_from_staging_sql(
@@ -537,18 +434,13 @@ def delete_dataframe(
     table: str,
     key: str = "_id",
     num_partitions: int | None = None,
-    ts_guard_col: str | None = None,
 ) -> None:
-    if num_partitions:
-        df = df.coalesce(num_partitions)
-    cols = [key] if ts_guard_col is None else [key, "__ts"]
-    df.select(*cols).foreachPartition(
-        lambda rows: delete_partition(
-            rows,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table,
-            key=key,
-            ts_guard_col=ts_guard_col,
-        )
+    """Distributed delete of ``df``'s keys, one txn per partition."""
+    sql = DIALECTS[dialect_name].delete_sql(table, key)
+    write_dataframe(
+        df.select(key),
+        lambda row: (sql, tuple(row)),
+        connection_factory=connection_factory,
+        dialect_name=dialect_name,
+        num_partitions=num_partitions,
     )

@@ -6,9 +6,11 @@ Structured Streaming query:
 
     ops stream -> foreachBatch:
         per table: merge_ops_microbatch (one shuffle, final action per key)
-        -> apply to the sink: upserts (whole rows), patches (present fields
-           only), deletes — each partition one transaction, with the batch id
-           recorded in-txn (sinks/jdbc_upsert.py) for exactly-once apply.
+        -> one sink pass over the action frame: each row is an upsert (whole
+           row), a patch (present fields only) or a delete, and each
+           partition applies all of them in ONE transaction that also
+           records the batch id under ONE replay marker
+           (sinks/jdbc_upsert.write_partition) for exactly-once apply.
 
 Ordering: the reference relies on a single sequential applier; the engine
 instead collapses each batch to one action per key *before* writing (order-
@@ -26,7 +28,7 @@ with the official connector's updateDescription/fullDocument surface).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -34,90 +36,8 @@ from pyspark.sql import functions as F
 
 from momyre_spark.operators.cdc import merge_ops_microbatch
 from momyre_spark.sinks.dialects import DIALECTS, check_ident
-from momyre_spark.sinks.jdbc_upsert import (
-    ConnFactory,
-    _progress_key,
-    _write_progress_in_tx,
-    delete_dataframe,
-    ensure_progress_table,
-    read_progress,
-    upsert_dataframe,
-)
+from momyre_spark.sinks.jdbc_upsert import ConnFactory, write_dataframe
 from momyre_spark.spec import Spec, TableSpec
-
-
-def patch_partition(
-    rows,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    table: str,
-    fields: list[str],
-    key: str,
-    batch_id: int | None = None,
-    ts_guard_col: str | None = None,
-    layout: int | None = None,
-) -> None:
-    """Executor-side partial-update apply (reference K4, mysql.go:449-505).
-
-    Rows carry ``__present`` (fields the patch sets). Rows are grouped by
-    their present-set so each distinct shape becomes one prepared statement
-    executed with executemany — batched, unlike the reference's
-    per-row statements. ``layout`` (total partition count) keys the replay
-    marker so a changed partition layout reapplies instead of skipping."""
-    dialect = DIALECTS[dialect_name]
-    check_ident(table)
-    ph = dialect.ph
-    try:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else None
-    except Exception:
-        part = None
-    pkey = _progress_key(f"{table}#patch", part, layout)
-    conn = connection_factory()
-    try:
-        cur = conn.cursor()
-        ensure_progress_table(cur, dialect)
-        if batch_id is not None:
-            seen = read_progress(cur, dialect, pkey, ph)
-            if seen is not None and seen >= batch_id:
-                return
-        groups: dict[tuple[str, ...], list[tuple]] = {}
-        for row in rows:
-            present = tuple(f for f in fields if f in set(row["__present"]))
-            if not present:
-                continue  # no-op patch (mysql.go:478-480: empty SET skipped)
-            args = tuple(row[f] for f in present)
-            if ts_guard_col is not None:
-                args += (row["__ts"], row[key], row["__ts"])
-            else:
-                args += (row[key],)
-            groups.setdefault(present, []).append(args)
-        for present, args in groups.items():
-            sets = ", ".join(f"{dialect.q(c)} = {ph}" for c in present)
-            if ts_guard_col is not None:
-                sql = (
-                    f"UPDATE {dialect.q(table)} SET {sets}, "
-                    f"{dialect.q(ts_guard_col)} = {ph} "
-                    f"WHERE {dialect.q(key)} = {ph} "
-                    f"AND {dialect.q(ts_guard_col)} <= {ph}"
-                )
-            else:
-                sql = (
-                    f"UPDATE {dialect.q(table)} SET {sets} "
-                    f"WHERE {dialect.q(key)} = {ph}"
-                )
-            cur.executemany(sql, args)
-        if batch_id is not None:
-            _write_progress_in_tx(cur, dialect, pkey, batch_id)
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
 
 
 def apply_actions(
@@ -127,12 +47,17 @@ def apply_actions(
     connection_factory: ConnFactory,
     dialect_name: str,
     batch_id: int | None = None,
-    key: str = "_id",
     num_partitions: int | None = None,
     ts_guard_col: str | None = None,
     tombstone_col: str | None = None,
 ) -> None:
-    """Write a merge_ops_microbatch action frame to the sink.
+    """Write a merge_ops_microbatch action frame to the sink in one pass.
+
+    Each row's ``__action`` picks its statement: ``upsert`` writes the whole
+    row, ``patch`` updates only the ``__present`` fields (reference K4,
+    mysql.go:449-505; one prepared statement per distinct field set) and
+    ``delete`` removes the key. Each partition commits all three kinds in
+    one transaction, replay-guarded by the ``{table}#actions`` marker.
 
     With ``ts_guard_col`` the actions frame must carry ``__ts`` (from
     ``merge_ops_microbatch(emit_seq=True)``) and the sink table a matching
@@ -156,99 +81,77 @@ def apply_actions(
     does)."""
     if tombstone_col is not None and ts_guard_col is None:
         raise ValueError("tombstone_col requires ts_guard_col")
+    dialect = DIALECTS[dialect_name]
+    name, key = table.name, "_id"
     fields = [c for c in table.sql_columns if c != key]
-    guard_cols = ["__ts"] if ts_guard_col else []
-    upsert_sel = [key, *fields] + (
-        [F.col("__ts").alias(ts_guard_col)] if ts_guard_col else []
-    )
-    if tombstone_col is not None:
-        upsert_sel.append(F.lit(0).alias(tombstone_col))
-    upserts = actions.filter(F.col("__action") == "upsert").select(*upsert_sel)
-    patches = actions.filter(F.col("__action") == "patch").select(
-        key, "__present", *guard_cols, *fields
-    )
-    deletes = actions.filter(F.col("__action") == "delete").select(
-        key, *guard_cols
-    )
-
-    upsert_dataframe(
-        upserts,
-        connection_factory=connection_factory,
-        dialect_name=dialect_name,
-        table=table.name,
-        key=key,
-        batch_id=batch_id,
-        num_partitions=num_partitions,
-        ts_guard_col=ts_guard_col,
-    )
-    if num_partitions:
-        patches = patches.coalesce(num_partitions)
-    patch_rdd = patches.rdd
-    patch_layout = patch_rdd.getNumPartitions()
-    patch_rdd.foreachPartition(
-        lambda rows: patch_partition(
-            rows,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            fields=fields,
-            key=key,
-            batch_id=batch_id,
-            ts_guard_col=ts_guard_col,
-            layout=patch_layout,
+    if ts_guard_col is None:
+        upsert_sql = dialect.upsert_sql(name, [key, *fields], key)
+        delete_sql = dialect.delete_sql(name, key)
+    elif tombstone_col is None:
+        upsert_sql = dialect.guarded_upsert_sql(
+            name, [key, *fields, ts_guard_col], key, ts_guard_col
         )
-    )
-    if tombstone_col is not None:
+        delete_sql = dialect.guarded_delete_sql(name, key, ts_guard_col)
+    else:
         # soft delete: a guarded upsert that keeps the key + high-water mark
         # with the tombstone flag set — closes the resurrection window
-        tombstones = deletes.select(
-            key,
-            F.col("__ts").alias(ts_guard_col),
-            F.lit(1).alias(tombstone_col),
+        upsert_sql = dialect.guarded_upsert_sql(
+            name, [key, *fields, ts_guard_col, tombstone_col], key, ts_guard_col
         )
-        upsert_dataframe(
-            tombstones,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            key=key,
-            batch_id=batch_id,
-            num_partitions=num_partitions,
-            ts_guard_col=ts_guard_col,
-            progress_label=f"{table.name}#tombstone",
+        delete_sql = dialect.guarded_upsert_sql(
+            name, [key, ts_guard_col, tombstone_col], key, ts_guard_col
         )
-    else:
-        delete_dataframe(
-            deletes,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            key=key,
-            num_partitions=num_partitions,
-            ts_guard_col=ts_guard_col,
-        )
+    # tombstone flag written by upserts (live) and soft deletes (dead)
+    live, dead = ((0,), (1,)) if tombstone_col else ((), ())
+    patch_sql: dict[tuple[str, ...], str] = {}  # field set -> UPDATE, per task
+    n = len(fields)
+
+    def statement(row):
+        # row = (__action, __present, key, *fields[, __ts])
+        action, k, vals, ts = row[0], row[2], row[3 : 3 + n], row[3 + n :]
+        if action == "upsert":
+            return upsert_sql, (k, *vals, *ts, *live)
+        if action == "delete":
+            return delete_sql, (k, *ts, *dead)
+        present = set(row[1])
+        cols = tuple(f for f in fields if f in present)
+        if not cols:
+            return None  # no-op patch (mysql.go:478-480: empty SET skipped)
+        sql = patch_sql.get(cols)
+        if sql is None:
+            sql = patch_sql[cols] = dialect.update_sql(name, cols, key, ts_guard_col)
+        return sql, (*(v for f, v in zip(fields, vals) if f in present), *ts, k, *ts)
+
+    write_dataframe(
+        actions.select("__action", "__present", key, *fields,
+                       *(["__ts"] if ts_guard_col else [])),
+        statement,
+        connection_factory=connection_factory,
+        dialect_name=dialect_name,
+        batch_id=batch_id,
+        # a label of its own: a `{table}` marker left by upsert_dataframe
+        # must not make this pass skip a batch's patches and deletes
+        label=f"{name}#actions",
+        num_partitions=num_partitions,
+    )
 
 
-def apply_ops_microbatch(
+def _per_table(
     batch_df: DataFrame,
-    batch_id: int,
     spec: Spec,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    order: Sequence[str] | None = None,
-    ns_col: str = "ns",
-    num_partitions: int | None = None,
-    ts_guard_col: str | None = None,
-    tombstone_col: str | None = None,
+    order: Sequence[str] | None,
+    apply: Callable[[TableSpec, dict[str, str], DataFrame], None],
+    emit_seq: bool = False,
 ) -> None:
-    """foreachBatch body: route ops by namespace, merge, apply per table.
+    """Route a microbatch's ops by namespace, reduce each table's ops to one
+    action per key (merge_ops_microbatch) and hand the action frame to
+    ``apply(table_spec, fields, actions)``.
 
     The batch is persisted for the duration of the apply: each table's
     branch filters the same frame, and without the persist a 10-table spec
     would re-read/re-decode the micro-batch 10 times.
 
-    ``order=None`` (default) auto-selects the tie-breakers the IR carries:
+    ``order=None`` auto-selects the tie-breakers the IR carries:
     ``seq`` (txn-unwrap array position, sources/opslog.py C8 — inner
     applyOps ops share the outer ts) and ``tok`` (connector resume token,
     sources/mongo.py — txn events share one clusterTime), giving
@@ -262,25 +165,47 @@ def apply_ops_microbatch(
         batch_df = batch_df.persist()
     try:
         for tname, tspec in spec.tables.items():
-            ops = batch_df.filter(F.col(ns_col) == tname)
+            ops = batch_df.filter(F.col("ns") == tname)
             fields = {c: t for c, t in tspec.sql_columns.items() if c != "_id"}
             actions = merge_ops_microbatch(
-                ops, fields, key="_id", order=order,
-                emit_seq=ts_guard_col is not None,
+                ops, fields, key="_id", order=order, emit_seq=emit_seq
             )
-            apply_actions(
-                actions,
-                tspec,
-                connection_factory=connection_factory,
-                dialect_name=dialect_name,
-                batch_id=batch_id,
-                num_partitions=num_partitions,
-                ts_guard_col=ts_guard_col,
-                tombstone_col=tombstone_col,
-            )
+            apply(tspec, fields, actions)
     finally:
         if multi_table:
             batch_df.unpersist()
+
+
+def apply_ops_microbatch(
+    batch_df: DataFrame,
+    batch_id: int,
+    spec: Spec,
+    *,
+    connection_factory: ConnFactory,
+    dialect_name: str,
+    order: Sequence[str] | None = None,
+    num_partitions: int | None = None,
+    ts_guard_col: str | None = None,
+    tombstone_col: str | None = None,
+) -> None:
+    """foreachBatch body: route ops by namespace, merge, apply per table
+    (see _per_table for the routing and apply_actions for the sink pass)."""
+    _per_table(
+        batch_df,
+        spec,
+        order,
+        lambda tspec, fields, actions: apply_actions(
+            actions,
+            tspec,
+            connection_factory=connection_factory,
+            dialect_name=dialect_name,
+            batch_id=batch_id,
+            num_partitions=num_partitions,
+            ts_guard_col=ts_guard_col,
+            tombstone_col=tombstone_col,
+        ),
+        emit_seq=ts_guard_col is not None,
+    )
 
 
 def start_cdc_stream(
@@ -302,7 +227,13 @@ def start_cdc_stream(
     ``momyre.timestamp`` resume token (S4/K6) for source offsets; the
     per-batch progress markers in the sink give exactly-once apply.
     ``ts_guard_col``/``tombstone_col``: see apply_actions — sequence-guarded
-    writes and soft deletes for out-of-order transports."""
+    writes and soft deletes for out-of-order transports. Bad options raise
+    ``ValueError`` here, before the query starts."""
+    if tombstone_col is not None and ts_guard_col is None:
+        raise ValueError("tombstone_col requires ts_guard_col")
+    for ident in (*spec.tables, ts_guard_col, tombstone_col):
+        if ident is not None:
+            check_ident(ident)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_ops_microbatch(
@@ -366,7 +297,6 @@ def start_cdc_lake_stream(
     lake_root: str,
     checkpoint_dir: str,
     order: Sequence[str] | None = None,
-    ns_col: str = "ns",
     partition_by: dict[str, list[str]] | None = None,
     trigger: dict[str, Any] | None = None,
     versioned: bool = False,
@@ -392,38 +322,24 @@ def start_cdc_lake_stream(
     from momyre_spark.sinks.snapshots import snapshot_merge_cdc
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        o = order
-        if o is None:
-            o = tuple(c for c in ("ts", "seq", "tok") if c in batch_df.columns)
-        multi_table = len(spec.tables) > 1
-        if multi_table:
-            batch_df = batch_df.persist()
-        try:
-            for tname, tspec in spec.tables.items():
-                ops = batch_df.filter(F.col(ns_col) == tname)
-                fields = {
-                    c: t for c, t in tspec.sql_columns.items() if c != "_id"
-                }
-                actions = merge_ops_microbatch(ops, fields, key="_id", order=o)
-                kwargs = {
-                    "key": "_id",
-                    "partition_by": (partition_by or {}).get(tname),
-                }
-                if versioned:
-                    # the epoch id makes replayed batches skip instead of
-                    # re-committing an identical version
-                    kwargs["batch_id"] = batch_id
-                merge = snapshot_merge_cdc if versioned else merge_cdc_actions
-                merge(
-                    batch_df.sparkSession,
-                    f"{lake_root}/{tname}",
-                    actions,
-                    fields,
-                    **kwargs,
-                )
-        finally:
-            if multi_table:
-                batch_df.unpersist()
+        def merge(tspec: TableSpec, fields: dict[str, str], actions: DataFrame) -> None:
+            kwargs = {
+                "key": "_id",
+                "partition_by": (partition_by or {}).get(tspec.name),
+            }
+            if versioned:
+                # the epoch id makes replayed batches skip instead of
+                # re-committing an identical version
+                kwargs["batch_id"] = batch_id
+            (snapshot_merge_cdc if versioned else merge_cdc_actions)(
+                batch_df.sparkSession,
+                f"{lake_root}/{tspec.name}",
+                actions,
+                fields,
+                **kwargs,
+            )
+
+        _per_table(batch_df, spec, order, merge)
 
     writer = (
         ops_stream.writeStream.foreachBatch(handle)
